@@ -272,10 +272,9 @@ def build_partial_profile(
     ride a Catalyst hash aggregate, but a per-partition quantile grid
     is the same mergeable-sketch shape with JVM-only machinery. The
     merged value is a documented approximation (rank error ≲ grid step
-    within each partition) vs the default column-pruned
-    percentile_approx pass; opt in via
-    profile_partitioned(quantile_impl='fused') /
-    run_validation(quantile_impl='fused')."""
+    within each partition) vs the column-pruned percentile_approx pass
+    profile_partitioned and run_validation use; incremental validation
+    takes the grid so a delta's profile needs no second input pass."""
     cols = columns or df.columns
     schema = {f.name: f.dataType for f in df.schema.fields}
     plan = PartialProfilePlan(
@@ -592,23 +591,14 @@ def profile_partitioned(
     detect_formats: bool = False,
     distinct_nested: bool = False,
     with_quantiles: bool = True,
-    quantile_impl: str = "approx",
 ) -> ProfileResult:
     """Standalone fused-scan profile: one pass grouped by
     ``spark_partition_id()`` + the merge aggregations (+ the pruned
     quantile pass when numeric columns exist). Same metric names and
     reference semantics as profile(); distinct counts use the HLL
     sketch family instead of approx_count_distinct. run_validation goes
-    further and shares the partial scan with the row rules.
-
-    quantile_impl: 'approx' (default) = one extra column-pruned
-    percentile_approx pass; 'fused' = q1/median/q3 ride the fused scan
-    as per-partition quantile grids (ONE total input pass for numeric
-    tables; documented approximation, see build_partial_profile)."""
-    plan = build_partial_profile(
-        df, columns, detect_formats, distinct_nested,
-        fused_quantiles=(with_quantiles and quantile_impl == "fused"),
-    )
+    further and shares the partial scan with the row rules."""
+    plan = build_partial_profile(df, columns, detect_formats, distinct_nested)
     part = (
         df.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(*plan.exprs)

@@ -28,11 +28,10 @@ def media_refs_expr(spans_col: str = "spans"):
 
 
 def distinct_refs(df: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Distinct non-null media refs with per-input-partition attribution.
-
-    Dedups (partition_id, media_ref) BEFORE the join shuffle — at
-    10^12 docs the distinct refs per partition are orders of magnitude
-    fewer than span rows.
+    """(partition_id, doc_id, _row, media_ref): one row per input row x
+    distinct non-null media ref, with per-input-partition attribution.
+    ``_row`` identifies the input row (unique across partitions), so
+    rows that share a doc_id stay apart however they are partitioned.
 
     The refs come from DIRECT nested-field extraction
     (``spans.media_ref`` = GetArrayStructFields) + array_compact, NOT a
@@ -45,14 +44,18 @@ def distinct_refs(df: DataFrame, spans_col: str = "spans") -> DataFrame:
     array_compact(x) ≡ filter(x, isNotNull) with order preserved, so
     violation rows are unchanged (one per doc × distinct ref).
     """
-    return (
-        df.select(
-            F.spark_partition_id().cast("int").alias("partition_id"),
-            F.col("doc_id").cast("string").alias("doc_id"),
-            # per-row distinct BEFORE explode: a doc repeating one ref
-            # emits it once (also keeps violation rows one-per-doc×ref)
-            F.explode(media_refs_expr(spans_col)).alias("media_ref"),
-        )
+    # _row is assigned in its own projection BELOW the explode: in the
+    # explode's select it would sit above the Generate node and give
+    # every exploded (row, ref) pair its own id
+    return df.select(
+        F.spark_partition_id().cast("int").alias("partition_id"),
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.monotonically_increasing_id().alias("_row"),
+        # per-row distinct BEFORE explode: a doc repeating one ref
+        # emits it once (also keeps violation rows one-per-doc×ref)
+        media_refs_expr(spans_col).alias("_refs"),
+    ).select(
+        "partition_id", "doc_id", "_row", F.explode("_refs").alias("media_ref")
     )
 
 
@@ -67,8 +70,10 @@ def referential_check(
 ) -> tuple[DataFrame, DataFrame]:
     """Return (verdicts, violations) in rules VERDICT/VIOLATION schema.
 
-    Violation = a doc containing at least one dangling media_ref; one
-    violation row per (doc, dangling ref). ONE pass over the fact
+    Violation = an input row containing at least one dangling
+    media_ref; one violation row per (row, distinct dangling ref), and
+    the verdict counts ROWS — rows sharing a doc_id count once each,
+    whatever the partitioning. ONE pass over the fact
     table: the dangling set is persisted (small) and per-partition
     verdict counts aggregate from it; partition_totals reuses row
     counts from the row-rules pass when available (same scan
@@ -98,20 +103,18 @@ def referential_check(
     if callable(partition_totals):
         dangling.count()  # pins the persisted dangling set
         partition_totals = partition_totals()
+    # the verdict counts offending input rows, not violation rows
+    offending = dangling.select("partition_id", "_row").distinct()
     if isinstance(partition_totals, DataFrame):
         from .rules import distributed_verdicts
 
         return (
-            distributed_verdicts(
-                partition_totals, violations, rule_id, distinct_doc=True
-            ),
+            distributed_verdicts(partition_totals, offending, rule_id),
             violations,
         )
     viol_by_pid = {
         r["partition_id"]: r["cnt"]
-        for r in dangling.select("partition_id", "doc_id")
-        .distinct()
-        .groupBy("partition_id")
+        for r in offending.groupBy("partition_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
     }

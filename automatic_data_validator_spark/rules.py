@@ -56,7 +56,6 @@ def distributed_verdicts(
     totals_df: DataFrame,
     violations: DataFrame,
     rule_id: str,
-    distinct_doc: bool = False,
 ) -> DataFrame:
     """Verdicts as a cluster-side full outer join of per-partition row
     totals (partition_id, row_count) against per-partition violation
@@ -65,12 +64,8 @@ def distributed_verdicts(
     should hold as rows (~8M partitions at 10^12 docs / 128MB splits);
     partitions with violations but no totals entry surface as failing
     verdicts with row_count 0 (full join), never silently dropped.
-    ``distinct_doc``: count violations per distinct (partition, doc)
-    instead of per violation row (refcheck semantics)."""
-    v = violations
-    if distinct_doc:
-        v = v.select("partition_id", "doc_id").distinct()
-    viol_counts = v.groupBy("partition_id").agg(F.count(F.lit(1)).alias("_viol"))
+    Every row of ``violations`` counts once."""
+    viol_counts = violations.groupBy("partition_id").agg(F.count(F.lit(1)).alias("_viol"))
     return (
         totals_df.select(
             F.col("partition_id").cast("int").alias("partition_id"),

@@ -13,17 +13,72 @@ builder and inherit everything from spark-submit.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 
-def _mem_mb(size: str) -> int:
-    """JVM memory string ('48g', '4096m', plain bytes) -> whole MB."""
-    s = size.strip().lower()
-    mult = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
-    if s and s[-1] in mult:
-        return max(int(float(s[:-1]) * mult[s[-1]]), 1)
-    return max(int(s) // (1024 * 1024), 1)
+# Spark's byteStringAs suffixes, in MiB; a bare number is MiB
+# (spark.driver.memory's default unit)
+_MIB_PER_UNIT = {
+    "": 1, "b": 1 / 2**20, "k": 1 / 1024, "kb": 1 / 1024, "m": 1, "mb": 1,
+    "g": 1024, "gb": 1024, "t": 2**20, "tb": 2**20, "p": 2**30, "pb": 2**30,
+}
+
+
+def _mem_mb(size: str) -> int | None:
+    """Spark memory string ('48g', '4gb', '512mb', '2048') -> whole MiB,
+    parsed like Spark's JavaUtils.byteStringAs; None when Spark would
+    reject it (garbage, fractions) or it rounds to zero."""
+    m = re.fullmatch(r"(\d+)([a-z]*)", size.strip().lower())
+    if not m or m.group(2) not in _MIB_PER_UNIT:
+        return None
+    return int(int(m.group(1)) * _MIB_PER_UNIT[m.group(2)]) or None
+
+
+# cgroup v2, then v1 memory limit files
+_CGROUP_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _host_mem_mb(limit_files=_CGROUP_LIMIT_FILES) -> int | None:
+    """Memory this process may use: physical RAM, lowered by a cgroup
+    (v2 or v1) limit when one is set. None when neither is readable."""
+    limits = []
+    try:
+        limits.append(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+    except (ValueError, OSError):
+        pass
+    for path in limit_files:
+        try:
+            with open(path) as f:
+                limits.append(int(f.read().strip()))  # "max" -> ValueError
+        except (OSError, ValueError):
+            pass
+    return min(limits) // 2**20 if limits else None
+
+
+def _driver_mem(host_mb: int | None) -> str:
+    """An explicit $SPARK_DRIVER_MEM as given; else a quarter of the
+    host's (or cgroup's) memory, leaving the rest to Python workers and
+    the page cache."""
+    return os.environ.get("SPARK_DRIVER_MEM") or (
+        f"{max(host_mb // 4, 512)}m" if host_mb else "1g"
+    )
+
+
+def _driver_java_opts(driver_mem: str, host_mb: int | None) -> str:
+    """ParallelGC plus a pre-sized heap (-Xms = driver memory, young
+    gen = 1/3). The pre-sizing is left out when the size does not
+    parse or exceeds the host: the JVM cannot commit such a heap at
+    launch, but it still runs with a heap grown on demand."""
+    opts = "-XX:+UseParallelGC"
+    mb = _mem_mb(driver_mem)
+    if mb is not None and (host_mb is None or mb <= host_mb):
+        opts += f" -Xms{mb}m -Xmn{max(mb // 3, 1)}m"
+    return opts
 
 
 def get_spark(
@@ -42,7 +97,8 @@ def get_spark(
         parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = max(parallelism, 32)
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    host_mb = _host_mem_mb()
+    driver_mem = _driver_mem(host_mb)
     builder = SparkSession.builder
     # Respect an externally-provided master. PYSPARK_SUBMIT_ARGS alone
     # is NOT a reliable signal: spark-submit launches the python driver
@@ -113,8 +169,7 @@ def get_spark(
         # memory, so a smaller $SPARK_DRIVER_MEM scales it down.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:+UseParallelGC "
-            f"-Xms{_mem_mb(driver_mem)}m -Xmn{_mem_mb(driver_mem) // 3}m",
+            _driver_java_opts(driver_mem, host_mb),
         )
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
     )

@@ -1,11 +1,10 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — a broadcast cross join with the
-dot product computed by ``F.zip_with`` + ``F.aggregate`` (JVM-side,
-no Python). Scale path: LSH-bucketed variant using random-hyperplane
-signatures so candidate generation is a bucket equi-join instead of a
-cross product; at 100 TB only the bucket join shuffles, and its key is
-an 8-byte hash.
+Exact path: ``brute_force_topk_arrow`` — cosine top-k scored by one
+BLAS matmul per Arrow batch, each batch emitting only its local top-k.
+Scale path: LSH-bucketed variant using random-hyperplane signatures so
+candidate generation is a bucket equi-join instead of a cross product;
+at 100 TB only the bucket join shuffles, and its key is an 8-byte hash.
 """
 
 from __future__ import annotations
@@ -22,86 +21,6 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact cosine top-k per query vector.
-
-    queries: (query_id, embedding). The query side is broadcast (it's
-    the small side by construction); ranking uses a window per query
-    with a deterministic (sim desc, id asc) tie-break.
-    Returns (query_id, neighbor_id, cosine_sim).
-    """
-    # norms hoisted to per-ROW columns before the join: cosine inside
-    # the pair projection would recompute both norms per PAIR (3
-    # interpreted HOF passes over dim elements instead of 1)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_v"),
-        _norm(F.col(vec_col)).alias("_vn"),
-    )
-    sims = v.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        (_dot(F.col("_v"), F.col("_qv")) / (F.col("_vn") * F.col("_qn"))).alias(
-            "cosine_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def hyperplane_signature(vec_col: str, n_planes: int = 16, dim: int = 64, seed: int = 42):
-    """Random-hyperplane LSH signature as a bigint bit-pack.
-
-    Plane weights are deterministic (numpy RandomState(seed)) and
-    embedded as LITERAL arrays in the plan — identical on every
-    executor, no broadcast variable, and crucially no per-row weight
-    regeneration (the previous formulation re-derived every weight
-    from xxhash64 inside nested HOF lambdas: O(planes x dim)
-    interpreted work per row; now only the dot products remain).
-    ``dim`` must match the embedding length: mismatched rows get a
-    NULL signature (they drop out of bucket equi-joins) instead of the
-    silent all-zero signature a null-padded zip_with would produce —
-    an all-zero sig would collapse every row into ONE bucket and make
-    the LSH join quadratic.
-    """
-    planes = _plane_matrix(n_planes, dim, seed)  # single weight source
-    v = F.col(vec_col)
-    sig = F.lit(0).cast("long")
-    for p in range(n_planes):
-        w_lit = F.array(*[F.lit(float(x)) for x in planes[p]])
-        proj = F.aggregate(
-            F.zip_with(v, w_lit, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig.bitwiseOR(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(F.lit(0).cast("long"))
-        )
-    return F.when(F.size(v) == dim, sig)
-
-
 def _plane_matrix(n_planes: int, dim: int, seed: int):
     import numpy as np
 
@@ -112,14 +31,19 @@ def _plane_matrix(n_planes: int, dim: int, seed: int):
 def hyperplane_signatures_batch(
     vec_col: str, n_planes: int, dim: int, seeds: "list[int]"
 ):
-    """All LSH tables' signatures in ONE Arrow-batched matmul.
+    """All LSH tables' random-hyperplane signatures in ONE Arrow-batched
+    matmul.
 
-    Returns array<bigint> (one packed signature per table). Per batch:
-    (rows x dim) @ (dim x tables*planes) in BLAS, then a bitpack — vs
-    the expression path's n_tables x n_planes interpreted aggregate()
-    calls per row. Same plane weights as hyperplane_signature (seeded
-    numpy), so buckets agree except for projections within float-sum
-    reordering of 0 (measure-zero for real data)."""
+    Returns array<bigint> (one bit-packed signature per table; bit p
+    set when the projection on plane p is positive). Per batch:
+    (rows x dim) @ (dim x tables*planes) in BLAS, then a bitpack —
+    instead of n_tables x n_planes interpreted aggregate() calls per
+    row. Plane weights come from numpy RandomState(seed) per table, so
+    every executor derives the same planes. ``dim`` must match the
+    embedding length: NULL and mismatched rows get a NULL signature
+    (they drop out of bucket equi-joins) — an all-zero signature would
+    collapse every such row into ONE bucket and make the LSH join
+    quadratic."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -134,10 +58,8 @@ def hyperplane_signatures_batch(
         out = np.empty(len(s), dtype=object)
         out[:] = None  # null embeddings -> null signature, not a crash
         notna = s.notna().to_numpy()
-        # wrong-dimension embeddings -> NULL signature, matching the
-        # expression path's contract (hyperplane_signature): the row
-        # drops out of bucket equi-joins instead of failing the job
-        # (round-2 ADVICE: the two impls must share failure semantics)
+        # wrong-dimension embeddings -> NULL signature: the row drops
+        # out of bucket equi-joins instead of failing the job
         lens = np.fromiter(
             (len(v) if ok else -1 for v, ok in zip(s, notna)),
             dtype=np.int64,
@@ -338,16 +260,14 @@ def lsh_topk(
     n_tables: int = 4,
     seed: int = 42,
     dim: int | None = None,
-    signature_impl: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: candidates = vectors sharing any of
     ``n_tables`` hyperplane-signature buckets with the query, then
     exact cosine rank within candidates. The bucket join is an
     equi-join on (table, signature) — shuffle on 8-byte keys only.
     ``dim`` is inferred from the (small) query side when omitted.
-    signature_impl: 'arrow' (default) computes all tables' signatures
-    in one BLAS matmul per Arrow batch; 'expr' keeps the pure-Catalyst
-    expression path (no Python workers, same weights)."""
+    All tables' signatures come from one BLAS matmul per Arrow batch
+    (hyperplane_signatures_batch)."""
     if dim is None:
         row = queries.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
         if row is None:
@@ -361,32 +281,13 @@ def lsh_topk(
     def with_sigs(df, idc):
         # norm hoisted next to the vector BEFORE the signature explode:
         # one norm pass per row, copied (not recomputed) per table row
-        if signature_impl == "arrow":
-            sigs = hyperplane_signatures_batch(vec_col, n_planes, dim, seeds)
-            return df.select(
-                F.col(idc).alias("_id"),
-                F.col(vec_col).alias("_v"),
-                _norm(F.col(vec_col)).alias("_n"),
-                F.posexplode(sigs).alias("tbl", "sig"),
-            )
+        sigs = hyperplane_signatures_batch(vec_col, n_planes, dim, seeds)
         return df.select(
             F.col(idc).alias("_id"),
             F.col(vec_col).alias("_v"),
             _norm(F.col(vec_col)).alias("_n"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tbl"),
-                            hyperplane_signature(
-                                vec_col, n_planes, dim=dim, seed=seed + t
-                            ).alias("sig"),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("b"),
-        ).select("_id", "_v", "_n", "b.tbl", "b.sig")
+            F.posexplode(sigs).alias("tbl", "sig"),
+        )
 
     vs = with_sigs(vectors, id_col)
     qs = (
@@ -419,21 +320,24 @@ def brute_force_topk_arrow(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact cosine top-k, vectorized: same contract and ranking as
-    ``brute_force_topk`` (query side small by construction; ties break
-    sim desc, neighbor_id asc) but the scoring is ONE float64 BLAS
-    matmul per Arrow batch instead of an interpreted aggregate()/
-    zip_with() HOF pair per (vector, query) — the 20x-interpreted-HOF
-    cost the expression baseline pays per element.
+    """Exact cosine top-k per query vector.
+
+    queries: (query_id, embedding), small by construction. Returns
+    (query_id, neighbor_id, cosine_sim), ranked per query with a
+    deterministic (sim desc, neighbor_id asc) tie-break. The scoring
+    is ONE float64 BLAS matmul per Arrow batch instead of an
+    interpreted aggregate()/zip_with() HOF pair per (vector, query) —
+    the 20x-interpreted-HOF cost an expression cross join pays per
+    element (that cross join is the test oracle).
 
     Scale shape for 10^12 vectors: the L2-normalized query matrix
     ships inside the UDF closure (small side), each batch emits only
     its LOCAL top-k per query (<= k x |queries| rows per batch), so
     the window that picks the global top-k shuffles a k-bounded
     candidate set, never the similarity matrix. Rows with NULL or
-    dimension-mismatched embeddings are dropped here (the expression
-    baseline carries them with NULL sims that sort last — same top-k
-    whenever >= k valid rows exist; NaN-norm rows differ, see test).
+    dimension-mismatched embeddings are dropped (the expression oracle
+    carries them with NULL sims that sort last — same top-k whenever
+    >= k valid rows exist; NaN-norm rows differ, see test).
     """
     import numpy as np
     import pandas as pd
@@ -446,9 +350,9 @@ def brute_force_topk_arrow(
     q_rows = queries.select(query_id_col, vec_col).collect()
     # the drop-dirty-rows contract applies to BOTH sides: a NULL or
     # dimension-mismatched QUERY embedding would otherwise crash the
-    # driver-side matrix build (the expression baseline carries such
-    # queries with all-NULL sims — k unrankable rows; here they are
-    # dropped, same policy as dirty vectors)
+    # driver-side matrix build (an expression cross join would carry
+    # such queries with all-NULL sims — k unrankable rows; here they
+    # are dropped, same policy as dirty vectors)
     dim = next((len(r[1]) for r in q_rows if r[1] is not None), None)
     q_rows = [r for r in q_rows if r[1] is not None and len(r[1]) == dim]
     if not q_rows:

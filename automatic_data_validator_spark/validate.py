@@ -65,8 +65,6 @@ def run_validation(
     with_profile: bool = True,
     check_uniqueness: bool = True,
     verdict_spill_threshold: int = 100_000,
-    fused_profile: bool = True,
-    quantile_impl: str = "approx",
     drift_baseline: "dict | str | None" = None,
     drift_columns: "list[str] | None" = None,
     drift_ks_threshold: float = 0.1,
@@ -205,38 +203,18 @@ def run_validation(
     # so the separate full profile pass disappears — only quantiles (for
     # numeric columns; the flagship documents shape has none) need one
     # extra column-pruned pass. Falls back to the classic separate pass
-    # when resuming a checkpoint whose row_rules phase already completed
-    # (its verdicts carry no partials).
+    # only when there is no row-rules scan to ride on: no row-level
+    # rules, or a resumed checkpoint whose row_rules phase already
+    # completed (its verdicts carry no partials).
     fused_state: dict[str, Any] = {}
     use_fused = bool(
-        fused_profile
-        and with_profile
+        with_profile
         and row_rules
         and not (ckpt and ckpt.is_done("profile"))
         and not (ckpt and ckpt.is_done("row_rules"))
     )
-
-    # quantile_impl='fused' rides q1/median/q3 in the shared scan as
-    # per-partition grids — numeric tables then need NO extra quantile
-    # pass (documented approximation, profile.build_partial_profile).
-    # The opt-in needs the fused scan to ride on: surface the fallback
-    # instead of silently running the separate pass the caller opted
-    # out of (round-4 review finding).
-    if quantile_impl == "fused" and with_profile and not use_fused:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "run_validation: quantile_impl='fused' needs the fused "
-            "rules+profile scan (non-empty rule_set, fused_profile=True, "
-            "no completed row_rules/profile checkpoint) — falling back "
-            "to the separate column-pruned quantile pass"
-        )
     fused_plan = (
-        build_partial_profile(
-            documents,
-            detect_formats=False,
-            fused_quantiles=(quantile_impl == "fused" and with_profile),
-        )
+        build_partial_profile(documents, detect_formats=False)
         if use_fused
         else None
     )

@@ -6,6 +6,7 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 
+import reference_kernels as ref
 from automatic_data_validator_spark import dedup as D
 from automatic_data_validator_spark import similarity as S
 
@@ -93,7 +94,7 @@ def test_brute_force_topk_matches_numpy(spark):
     queries = spark.createDataFrame(
         pd.DataFrame({"query_id": [0, 1], "embedding": [vecs[0].tolist(), vecs[1].tolist()]})
     )
-    got = S.brute_force_topk(df, queries, k=5).toPandas()
+    got = ref.brute_force_topk(df, queries, k=5).toPandas()
 
     norm = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
     sims = norm @ norm.T
@@ -117,7 +118,7 @@ def test_lsh_topk_recall(spark):
         pd.DataFrame({"query_id": [5], "embedding": [vecs[5].tolist()]})
     )
     exact = set(
-        r["neighbor_id"] for r in S.brute_force_topk(df, queries, k=10).collect()
+        r["neighbor_id"] for r in ref.brute_force_topk(df, queries, k=10).collect()
     )
     approx = set(
         r["neighbor_id"]
@@ -141,7 +142,7 @@ def test_ivf_topk_recall(spark):
     )
     assigned, cents = S.ivf_index(df, n_lists=8)
     assert len(cents) == 8
-    exact = [r["neighbor_id"] for r in S.brute_force_topk(df, queries, k=10).collect()]
+    exact = [r["neighbor_id"] for r in ref.brute_force_topk(df, queries, k=10).collect()]
     approx = {
         r["neighbor_id"]
         for r in S.ivf_topk(assigned, cents, queries, k=10, nprobe=2).collect()
@@ -324,9 +325,9 @@ def test_minhash_single_pass_matches_per_permutation(spark):
 
 
 def test_lsh_signature_impls_agree(spark):
-    """BLAS-batch and Catalyst-expression signature paths share the
-    same plane weights: bucket assignments (and thus candidates) must
-    agree on real-valued data."""
+    """The BLAS-batch signatures and the Catalyst-expression oracle
+    share the same plane weights: bucket assignments (and thus
+    candidates) must agree on real-valued data."""
     rng = np.random.RandomState(5)
     vecs = rng.normal(size=(120, 24)).astype(np.float32)
     df = spark.createDataFrame(
@@ -341,20 +342,19 @@ def test_lsh_signature_impls_agree(spark):
     exprs = df.select(
         "vec_id",
         *[
-            S.hyperplane_signature("embedding", 10, dim=24, seed=sd).alias(f"s{i}")
+            ref.hyperplane_signature("embedding", 10, dim=24, seed=sd).alias(f"s{i}")
             for i, sd in enumerate(seeds)
         ],
     ).collect()
     got_expr = {r["vec_id"]: [r["s0"], r["s1"], r["s2"]] for r in exprs}
     assert got_arrow == got_expr
-    # and the full topk flows agree on both impls
+    # and the full topk flow agrees with the oracle's
     q = spark.createDataFrame(
         pd.DataFrame({"query_id": [3], "embedding": [vecs[3].tolist()]})
     )
     a = {r["neighbor_id"] for r in
-         S.lsh_topk(df, q, k=8, n_planes=8, n_tables=4, signature_impl="arrow").collect()}
-    b = {r["neighbor_id"] for r in
-         S.lsh_topk(df, q, k=8, n_planes=8, n_tables=4, signature_impl="expr").collect()}
+         S.lsh_topk(df, q, k=8, n_planes=8, n_tables=4).collect()}
+    b = set(ref.lsh_topk_expr(df, q, k=8, n_planes=8, n_tables=4)[3])
     assert a == b
 
 
@@ -376,13 +376,17 @@ def test_lsh_arrow_signatures_tolerate_null_embeddings(spark):
         S.hyperplane_signatures_batch("embedding", 6, 8, [42]).alias("s")
     ).collect()
     assert got[0]["s"] is None
-    # expression path: wrong-dim vector -> NULL signature, not all-zero
+    # wrong-dim vector -> NULL signature, not all-zero, in the kernel
+    # and in the expression oracle
     wrong = spark.createDataFrame(
         pd.DataFrame({"vec_id": [3], "embedding": [[1.0] * 5]}),
         "vec_id long, embedding array<double>",
     )
-    sig = wrong.select(S.hyperplane_signature("embedding", 6, dim=8).alias("s")).collect()
-    assert sig[0]["s"] is None
+    sig = wrong.select(
+        S.hyperplane_signatures_batch("embedding", 6, 8, [42]).alias("a"),
+        ref.hyperplane_signature("embedding", 6, dim=8).alias("s"),
+    ).collect()
+    assert sig[0]["a"] is None and sig[0]["s"] is None
 
 
 def test_simhash_quoted_column_name(spark):
@@ -410,10 +414,10 @@ def test_minhash_arrow_impl_equals_expr(spark):
     )
     rows = df.select(
         "id",
-        D.minhash_signature("text", num_hashes=16, impl="arrow").alias("a"),
-        D.minhash_signature("text", num_hashes=16, impl="expr").alias("e"),
-        D.minhash_signature("text", num_hashes=24, shingle_k=2, impl="arrow").alias("a2"),
-        D.minhash_signature("text", num_hashes=24, shingle_k=2, impl="expr").alias("e2"),
+        D.minhash_signature("text", num_hashes=16).alias("a"),
+        ref.minhash_signature_expr("text", num_hashes=16).alias("e"),
+        D.minhash_signature("text", num_hashes=24, shingle_k=2).alias("a2"),
+        ref.minhash_signature_expr("text", num_hashes=24, shingle_k=2).alias("e2"),
     ).collect()
     for r in rows:
         assert r["a"] == r["e"], (r["id"], r["a"], r["e"])
@@ -432,8 +436,8 @@ def test_simhash_arrow_impl_equals_expr(spark):
     )
     rows = df.select(
         "id",
-        D.simhash("text", impl="arrow").alias("a"),
-        D.simhash("text", impl="expr").alias("e"),
+        D.simhash("text").alias("a"),
+        ref.simhash_expr("text").alias("e"),
     ).collect()
     for r in rows:
         assert r["a"] == r["e"], (r["id"], r["a"], r["e"])
@@ -453,15 +457,10 @@ def test_lsh_duplicates_same_pairs_both_impls(spark):
     a = {
         (r["id_a"], r["id_b"])
         for r in D.minhash_lsh_duplicates(
-            df, "id", "text", num_hashes=16, bands=4, signature_impl="arrow"
+            df, "id", "text", num_hashes=16, bands=4
         ).collect()
     }
-    e = {
-        (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_duplicates(
-            df, "id", "text", num_hashes=16, bands=4, signature_impl="expr"
-        ).collect()
-    }
+    e = ref.lsh_pairs_expr(df, "id", "text", num_hashes=16, bands=4)
     assert a == e and a
 
 
@@ -973,7 +972,7 @@ def test_neardup_corpus_rejects_bad_pair_count(spark):
 
 def test_brute_force_topk_arrow_equals_expression(spark):
     """The BLAS-batched exact scorer must return the SAME neighbors in
-    the SAME ranks as the expression baseline (sims agree to 1e-9),
+    the SAME ranks as the expression oracle (sims agree to 1e-9),
     and only k-bounded partials may leave each batch (scale contract
     is structural: per-batch local top-k before the window)."""
     rng = np.random.RandomState(11)
@@ -983,7 +982,7 @@ def test_brute_force_topk_arrow_equals_expression(spark):
     vdf = spark.createDataFrame(vecs, "vec_id string, embedding array<double>").repartition(8)
     qdf = spark.createDataFrame(qs, "query_id string, embedding array<double>")
 
-    base = S.brute_force_topk(vdf, qdf, k=k)
+    base = ref.brute_force_topk(vdf, qdf, k=k)
     fast = S.brute_force_topk_arrow(vdf, qdf, k=k)
 
     def keyed(df):

@@ -15,11 +15,26 @@ import math
 import pyspark.sql.functions as F
 import pytest
 
+from reference_kernels import run_validation_classic_profile
+from automatic_data_validator_spark import rules as R
 from automatic_data_validator_spark.profile import (
+    build_partial_profile,
+    finalize_partial_profile,
     profile,
     profile_partitioned,
 )
 from automatic_data_validator_spark.validate import run_validation
+
+
+def _grid_profile(df, detect_formats=False):
+    """Profile with q1/median/q3 from per-partition quantile grids, the
+    way incremental validation builds and finalizes its partials."""
+    plan = build_partial_profile(df, detect_formats=detect_formats, fused_quantiles=True)
+    part = R.per_partition_rule_aggregate(df, [], plan.exprs).persist()
+    try:
+        return finalize_partial_profile(part, plan)
+    finally:
+        part.unpersist()
 
 
 def _close(a, b, rtol=1e-6):
@@ -121,9 +136,7 @@ def test_moment_merge_edge_partitions(spark):
 
 def test_run_validation_fused_metrics_match_classic(spark, docs, catalog):
     fused = run_validation(spark, docs, catalog=catalog, with_profile=True)
-    classic = run_validation(
-        spark, docs, catalog=catalog, with_profile=True, fused_profile=False
-    )
+    classic = run_validation_classic_profile(spark, docs, catalog=catalog)
     fm = {(r["column"], r["metric"]): r["value"] for r in fused.metrics.collect()}
     cm = {(r["column"], r["metric"]): r["value"] for r in classic.metrics.collect()}
     assert set(fm) == set(cm)
@@ -173,8 +186,8 @@ def test_fused_run_cuts_input_scans(spark, parquet_docs):
         docs = spark.read.parquet(docs_path)
         catalog = spark.read.parquet(str(parquet_docs / "cat"))
         r0 = _input_records(spark)
-        res = run_validation(
-            spark, docs, catalog=catalog, with_profile=True, fused_profile=fused
+        res = (run_validation if fused else run_validation_classic_profile)(
+            spark, docs, catalog=catalog
         )
         # materialize everything a production run writes
         res.violations.count()
@@ -215,8 +228,6 @@ def test_fused_run_with_numeric_columns_adds_quantile_pass(spark):
     classic profile."""
     import pyspark.sql.functions as F2
 
-    from automatic_data_validator_spark import rules as R
-
     df = spark.range(0, 20_000, 1, 8).select(
         F2.concat(F2.lit("k"), F2.col("id")).alias("key"),
         (F2.col("id") % 97).cast("double").alias("val"),
@@ -231,9 +242,9 @@ def test_fused_run_with_numeric_columns_adds_quantile_pass(spark):
     ]
     fused = run_validation(spark, df, rule_set=rules, key_column="key",
                            check_uniqueness=False, with_profile=True)
-    classic = run_validation(spark, df, rule_set=rules, key_column="key",
-                             check_uniqueness=False, with_profile=True,
-                             fused_profile=False)
+    classic = run_validation_classic_profile(
+        spark, df, rule_set=rules, key_column="key", check_uniqueness=False
+    )
     fm = {(r["column"], r["metric"]): r["value"] for r in fused.metrics.collect()}
     cm = {(r["column"], r["metric"]): r["value"] for r in classic.metrics.collect()}
     assert set(fm) == set(cm)
@@ -269,13 +280,13 @@ def test_fused_profile_in_spill_mode_matches_default(spark, docs, catalog):
 
 
 def test_fused_quantiles_match_approx_within_tolerance(spark):
-    """quantile_impl='fused' (round-3 VERDICT directive #10): grid-
-    merged q1/median/q3 must track the default percentile_approx pass
-    within the documented grid-step tolerance, and every non-quantile
-    metric must be identical to the default fused path."""
+    """Fused quantile grids (round-3 VERDICT directive #10): grid-
+    merged q1/median/q3 must track the percentile_approx pass within
+    the documented grid-step tolerance, and every non-quantile metric
+    must be identical to the partitioned profile's."""
     df = _mixed_frame(spark)
     approx = profile_partitioned(df, detect_formats=False)
-    fused = profile_partitioned(df, detect_formats=False, quantile_impl="fused")
+    fused = _grid_profile(df)
     for c, st in approx.stats.items():
         for m, v in st.items():
             got = fused.stats.get(c, {}).get(m, "MISSING")
@@ -298,9 +309,9 @@ def test_fused_quantiles_match_approx_within_tolerance(spark):
 
 
 def test_fused_quantiles_single_input_pass(spark, tmp_path_factory):
-    """The point of the opt-in: a numeric table profiles in ONE input
-    pass under quantile_impl='fused' (vs two with the default separate
-    quantile pass)."""
+    """The point of the grid: a numeric table profiles in ONE input
+    pass with fused quantiles (vs two with the separate quantile
+    pass)."""
     base = tmp_path_factory.mktemp("fusedq")
     n = 30_000
     spark.range(0, n, 1, 8).select(
@@ -308,37 +319,33 @@ def test_fused_quantiles_single_input_pass(spark, tmp_path_factory):
         (F.col("id") % 101).cast("double").alias("b"),
     ).write.parquet(str(base / "t"))
 
-    def passes(quantile_impl: str) -> float:
+    def passes(profile_fn) -> float:
         spark.catalog.clearCache()
         df = spark.read.parquet(str(base / "t"))
         r0 = _input_records(spark)
-        profile_partitioned(df, detect_formats=False, quantile_impl=quantile_impl)
+        profile_fn(df, detect_formats=False)
         return (_input_records(spark) - r0) / n
 
-    assert passes("approx") >= 1.8
-    assert passes("fused") <= 1.2
+    assert passes(profile_partitioned) >= 1.8
+    assert passes(_grid_profile) <= 1.2
 
 
-def test_run_validation_fused_quantile_impl(spark):
-    """run_validation(quantile_impl='fused') on a numeric table: same
-    metric keys as the default, quantiles within tolerance, and no
-    separate quantile job needed."""
+def test_run_validation_quantiles_match_fused_grid(spark):
+    """On a numeric table, run_validation's quantiles (the separate
+    percentile_approx pass) and the fused quantile grids give the same
+    metric keys and quantiles within the grid tolerance."""
     df = spark.range(0, 10_000, 1, 6).select(
         F.concat(F.lit("k"), F.col("id")).alias("doc_id"),
         (F.col("id") % 97).cast("double").alias("val"),
     )
-    from automatic_data_validator_spark import rules as R
 
     rs = [R.Rule("nn_doc", "not_null", column="doc_id")]  # enables fusion
     default = run_validation(
         spark, df, rule_set=rs, check_uniqueness=False, with_profile=True
     )
-    fused = run_validation(
-        spark, df, rule_set=rs, check_uniqueness=False, with_profile=True,
-        quantile_impl="fused",
-    )
+    fused = _grid_profile(df).metrics_df(spark)
     dm = {(r["column"], r["metric"]): r["value"] for r in default.metrics.collect()}
-    fm = {(r["column"], r["metric"]): r["value"] for r in fused.metrics.collect()}
+    fm = {(r["column"], r["metric"]): r["value"] for r in fused.collect()}
     assert set(dm) == set(fm)
     for m in ("q1", "median", "q3"):
         assert abs(fm[("val", m)] - dm[("val", m)]) <= 5.0, (m, dm[("val", m)], fm[("val", m)])

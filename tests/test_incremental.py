@@ -911,3 +911,40 @@ def test_incremental_sees_hive_partition_columns(spark, tmp_path):
     for k, v in full_m.items():
         if isinstance(v, float) and not math.isnan(v):
             assert inc_m[k] == pytest.approx(v, rel=1e-9, abs=1e-9), k
+
+
+def test_neardup_resumes_manifest_naming_signature_kernel(spark, tmp_path):
+    """A near-dup manifest written while the signature kernel was
+    selectable carries "signature_impl" in its params. Both kernels
+    gave bit-identical signatures, so such state must resume: the next
+    increment runs, pairs a near-copy of a stored doc, and rewrites the
+    manifest without the key."""
+    import json
+
+    import pandas as pd
+
+    from automatic_data_validator_spark.dedup import incremental_neardup
+
+    corpus, state = str(tmp_path / "docs"), str(tmp_path / "nd_state")
+    body = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+
+    def append(rows):
+        spark.createDataFrame(
+            pd.DataFrame(rows, columns=["doc_id", "text"])
+        ).coalesce(1).write.mode("append").parquet(corpus)
+
+    append([(0, body), (1, "unrelated words about parquet footers")])
+    incremental_neardup(spark, corpus, state)
+    mpath = os.path.join(state, "neardup_manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    manifest["params"]["signature_impl"] = "arrow"
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+
+    append([(2, body + " mu")])
+    r = incremental_neardup(spark, corpus, state)
+    assert r.increment == 1
+    assert [(p["id_a"], p["id_b"]) for p in r.new_pairs.collect()] == [(0, 2)]
+    with open(mpath) as f:
+        assert "signature_impl" not in json.load(f)["params"]

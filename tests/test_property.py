@@ -92,6 +92,56 @@ def test_verdict_totals_partition_invariant(spark, docs):
     assert totals(docs) == totals(docs.repartition(11))
 
 
+@pytest.mark.parametrize("spill", [False, True], ids=["default", "spill"])
+def test_run_validation_partition_invariant(spark, spill):
+    """Every phase's per-rule verdict and lineage totals, and the
+    violation rows, are the same at 1, 2, 4 and 16 input partitions, in
+    both verdict modes. The table carries exact duplicate rows of docs
+    with dangling refs: rows sharing a doc_id must count once each for
+    referential_media_ref whether or not they share a partition."""
+    import pyspark.sql.functions as F
+
+    from automatic_data_validator_spark.synth import (
+        make_documents,
+        make_media_catalog,
+    )
+    from automatic_data_validator_spark.validate import (
+        canonical_violations,
+        run_validation,
+    )
+
+    base = make_documents(spark, 2_000, n_media=200, seed=7)
+    docs = base.unionByName(base.filter(F.xxhash64("doc_id") % 5 == 0)).cache()
+    catalog = make_media_catalog(spark, 200, seed=7).cache()
+
+    def sums(df, key):
+        return sorted(
+            tuple(r) for r in df.groupBy(*key)
+            .agg(F.sum("row_count"), F.sum("violation_count")).collect()
+        )
+
+    def summary(n_parts):
+        res = run_validation(
+            spark, docs.repartition(n_parts), catalog=catalog,
+            verdict_spill_threshold=0 if spill else 100_000,
+        )
+        rows = canonical_violations(res.violations).select(
+            "doc_id", "rule_id", "detail"
+        )
+        return (
+            sums(res.verdicts, ["rule_id"]),
+            sums(res.lineage, ["phase", "op"]),
+            [tuple(r) for r in rows.collect()],
+        )
+
+    one = summary(1)
+    assert dict((r[0], r[2]) for r in one[0])["referential_media_ref"] > 0
+    for n_parts in (2, 4, 16):
+        assert summary(n_parts) == one, n_parts
+    docs.unpersist()
+    catalog.unpersist()
+
+
 def test_normalize_spans_property_sweep(spark):
     """Arrow-normalizer invariant over adversarial span shapes: for
     EVERY doc, (kind, media_ref, offset) sequences are preserved
@@ -164,12 +214,13 @@ _texty = st.builds(
 def test_minhash_arrow_bit_equals_expr_fuzz(spark_sess, texts):
     """The numpy kernel (byte tokenization + vectorized XXH64 with
     stripe/long/int/byte tails + seed mixes) must be BIT-IDENTICAL to
-    the Catalyst expression path on adversarial inputs: whitespace-run
+    the Catalyst expression oracle on adversarial inputs: whitespace-run
     edges, leading/trailing separators, multi-byte UTF-8, empty and
     null texts, and >32-byte shingles that exercise the 32-byte stripe
     loop."""
     import pandas as pd
 
+    import reference_kernels as ref
     from automatic_data_validator_spark import dedup as D
 
     df = spark_sess.createDataFrame(
@@ -177,8 +228,8 @@ def test_minhash_arrow_bit_equals_expr_fuzz(spark_sess, texts):
     )
     rows = df.select(
         "id",
-        D.minhash_signature("text", num_hashes=8, impl="arrow").alias("a"),
-        D.minhash_signature("text", num_hashes=8, impl="expr").alias("e"),
+        D.minhash_signature("text", num_hashes=8).alias("a"),
+        ref.minhash_signature_expr("text", num_hashes=8).alias("e"),
     ).collect()
     for r in rows:
         assert r["a"] == r["e"], (texts[r["id"]], r["a"], r["e"])

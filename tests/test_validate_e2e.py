@@ -71,7 +71,7 @@ def test_verdict_counts_consistent(spark, docs, catalog):
     viol = result.violations.groupBy("rule_id").count().collect()
     for r in viol:
         if r["rule_id"] == "referential_media_ref":
-            continue  # verdict counts distinct docs; violations one per (doc, ref)
+            continue  # verdict counts rows; violations one per (row, ref)
         assert totals[r["rule_id"]][0] == r["count"], r["rule_id"]
 
 
@@ -221,6 +221,36 @@ def test_referential_rule_honored_and_loud_without_catalog(spark, docs, catalog)
     assert res.violations.filter(F.col("rule_id") == "my_refs").count() > 0
 
 
+@pytest.mark.parametrize("spill", [False, True], ids=["default", "spill"])
+def test_referential_verdict_counts_rows_not_refs(spark, spill):
+    """A row with two distinct dangling refs (plus one resolvable and
+    one repeated) is ONE offending row in the verdict but two violation
+    rows, one per distinct dangling ref, in both verdict modes."""
+    from automatic_data_validator_spark.synth import DOCUMENTS_SCHEMA
+
+    def span(ref):
+        return {"kind": "image", "text": None, "media_ref": ref, "offset": 0}
+
+    docs = spark.createDataFrame(
+        [
+            {"doc_id": "d1", "spans": [span("gone-1"), span("ok"), span("gone-2"),
+                                       span("gone-1")]},
+            {"doc_id": "d2", "spans": [span("ok")]},
+        ],
+        DOCUMENTS_SCHEMA,
+    )
+    catalog = spark.createDataFrame([("ok",)], "media_ref string")
+    res = run_validation(
+        spark, docs, catalog=catalog, with_profile=False, check_uniqueness=False,
+        rule_set=[R.Rule("refs", "referential", column="spans")],
+        verdict_spill_threshold=0 if spill else 100_000,
+    )
+    v = res.verdicts.agg(F.sum("row_count"), F.sum("violation_count")).first()
+    assert tuple(v) == (2, 1)
+    got = sorted((r["doc_id"], r["detail"]) for r in res.violations.collect())
+    assert got == [("d1", "gone-1"), ("d1", "gone-2")]
+
+
 def test_empty_rule_set_returns_empty_result(spark, docs):
     res = run_validation(spark, docs, rule_set=[], check_uniqueness=False,
                          with_profile=False)
@@ -236,11 +266,10 @@ def test_profile_phase_resumes_from_checkpoint(spark, docs, tmp_path):
     assert sorted(map(tuple, r2.metrics.collect())) == m1
 
 
-def test_spill_mode_with_fused_quantiles(spark):
-    """The two scale paths compose: distributed verdicts (spill mode)
-    + fused quantile grids. Metrics must carry quantiles equal to the
-    default path's within the grid tolerance, and verdicts must be
-    identical."""
+def test_spill_mode_with_numeric_quantiles(spark):
+    """Distributed verdicts (spill mode) on a numeric table: metrics
+    must carry quantiles equal to the default path's within the grid
+    tolerance, and verdicts must be identical."""
     import pyspark.sql.functions as F2
 
     from automatic_data_validator_spark import rules as R
@@ -255,7 +284,7 @@ def test_spill_mode_with_fused_quantiles(spark):
     )
     spilled = run_validation(
         spark, df, rule_set=rs, check_uniqueness=False, with_profile=True,
-        verdict_spill_threshold=1, quantile_impl="fused",
+        verdict_spill_threshold=1,
     )
     bm = {(r["column"], r["metric"]): r["value"] for r in base.metrics.collect()}
     sm = {(r["column"], r["metric"]): r["value"] for r in spilled.metrics.collect()}
