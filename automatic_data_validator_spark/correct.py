@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import config
+from .session import local_frame
 from .profile import ProfileResult, profile
 
 
@@ -341,4 +342,4 @@ def summary_report(
             _T.StructField("after", _T.DoubleType(), True),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

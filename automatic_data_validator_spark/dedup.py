@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import config
+from .session import local_frame
 
 
 def _salt(key_col: str, buckets: int):
@@ -82,8 +83,10 @@ def uniqueness_check(
     original occurrence. The former design's second full-table
     attribution join (broadcast-vs-SMJ guarded) is gone, halving the
     fact-table IO; nothing but the (small) violation set is persisted,
-    so no cache entry outlives the call (round-2 VERDICT wrong-list
-    #1). Shuffle volume is unchanged vs the salted two-phase agg: both
+    and that cache entry IS the returned violations frame: it outlives
+    the call until the caller runs ``violations.unpersist()``
+    (run_validation checkpoints the rows locally and releases it).
+    Shuffle volume is unchanged vs the salted two-phase agg: both
     carry one row per distinct (key, partition); the window adds a
     sort of those aggregated rows, which is the price of the saved
     100-TB scan.
@@ -180,7 +183,7 @@ def uniqueness_check(
         rows.append((int(pid), rule_id, 0, int(viol_by_pid[pid]), False))
     from .rules import VERDICT_SCHEMA
 
-    verdicts = spark.createDataFrame(rows, VERDICT_SCHEMA)
+    verdicts = local_frame(spark, rows, VERDICT_SCHEMA)
     return verdicts, violations
 
 
@@ -1240,8 +1243,8 @@ def connected_dup_groups(
     """
     labels = _driver_labels(pairs, driver_edge_limit)
     if labels is not None:
-        return pairs.sparkSession.createDataFrame(
-            sorted(labels.items()), _label_schema(pairs)
+        return local_frame(
+            pairs.sparkSession, sorted(labels.items()), _label_schema(pairs)
         ).persist()
 
     edges = (
@@ -1354,13 +1357,15 @@ def dedup_keep_representatives(
     left-anti join against the (small, broadcastable) drop list; ids
     outside any pair are untouched.
 
-    The drop list is localCheckpoint'ed (it is small by the pipeline's
-    own contract) so the connected-components cache can be RELEASED
-    here instead of leaking for the session (round-4 review finding) —
+    On the distributed path the drop list is localCheckpoint'ed (it is
+    small by the pipeline's own contract) so the connected-components
+    cache can be RELEASED here instead of leaking for the session —
     previously the persisted comps frame had no handle for callers to
     unpersist, and dropping the cache without materializing first
     would make later actions replay the iterative label plan
-    exponentially (each round references the previous one twice)."""
+    exponentially (each round references the previous one twice). The
+    driver path's drop list is a local frame, held by the JVM without
+    a checkpoint."""
     labels = _driver_labels(pairs, config.CC_DRIVER_EDGE_LIMIT)
     if labels is not None:
         # driver fast path (r6): the union-find already holds every
@@ -1371,9 +1376,9 @@ def dedup_keep_representatives(
         # distributed path's filter(doc_id != component) over the same
         # fixpoint labels.
         drop_rows = sorted((x, r) for x, r in labels.items() if x != r)
-        drop_list = df.sparkSession.createDataFrame(
-            drop_rows, _label_schema(pairs)
-        ).localCheckpoint(eager=True)
+        drop_list = local_frame(
+            df.sparkSession, drop_rows, _label_schema(pairs)
+        )
         n_drop = len(drop_rows)
     else:
         comps = connected_dup_groups(pairs)
@@ -1633,8 +1638,8 @@ def incremental_neardup(
                 corpus.limit(0), pairs.select("id_a", "id_b"), id_col
             )[1]
         )
-        empty_over = spark.createDataFrame(
-            [], "band int, bucket long, n_docs long"
+        empty_over = local_frame(
+            spark, [], "band int, bucket long, n_docs long"
         )
         return IncrementalNeardupResult(
             pairs.limit(0).select("id_a", "id_b", "jaccard"),
@@ -1677,8 +1682,8 @@ def incremental_neardup(
                 F.sum("n").alias("n_old")
             )
         else:
-            old_counts = spark.createDataFrame(
-                [], "band int, bucket long, n_old long"
+            old_counts = local_frame(
+                spark, [], "band int, bucket long, n_old long"
             )
         combined = (
             delta_counts.join(old_counts, ["band", "bucket"], "left")

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import config
+from .session import local_frame
 
 
 def media_refs_expr(spans_col: str = "spans"):
@@ -79,6 +80,23 @@ def referential_check(
     counts from the row-rules pass when available (same scan
     partitioning => same spark_partition_id assignment).
     """
+    dangling = _dangling_refs(
+        df, catalog, spans_col, catalog_rows, broadcast_limit
+    )
+    return _check_dangling(df, dangling, rule_id, partition_totals)
+
+
+def _dangling_refs(
+    df: DataFrame,
+    catalog: DataFrame,
+    spans_col: str = "spans",
+    catalog_rows: int | None = None,
+    broadcast_limit: int = config.BROADCAST_ROW_LIMIT,
+) -> DataFrame:
+    """referential_check's one pass over the fact table: the persisted
+    (partition_id, doc_id, _row, media_ref) rows whose ref is missing
+    from the catalog. The caller owns the cache entry; run_validation
+    releases it once the violations are checkpointed."""
     refs = distinct_refs(df, spans_col)
     cat = catalog.select("media_ref").distinct()
     if catalog_rows is None:
@@ -90,7 +108,17 @@ def referential_check(
         cat_side = cat.hint("merge")
     # dangling is consumed twice (violation rows + per-partition verdict
     # counts) and is small; persist so the explode+join runs once
-    dangling = refs.join(cat_side, "media_ref", "left_anti").persist()
+    return refs.join(cat_side, "media_ref", "left_anti").persist()
+
+
+def _check_dangling(
+    df: DataFrame,
+    dangling: DataFrame,
+    rule_id: str,
+    partition_totals: "dict[int, int] | DataFrame | Any | None",
+) -> tuple[DataFrame, DataFrame]:
+    """(verdicts, violations) of referential_check from its
+    _dangling_refs frame."""
     violations = dangling.select(
         "doc_id",
         F.lit(rule_id).alias("rule_id"),
@@ -139,5 +167,5 @@ def referential_check(
     # totals map must fail loudly, not vanish from the verdicts
     for pid in sorted(set(viol_by_pid) - set(partition_totals)):
         rows.append((int(pid), rule_id, 0, int(viol_by_pid[pid]), False))
-    verdicts = df.sparkSession.createDataFrame(rows, VERDICT_SCHEMA)
+    verdicts = local_frame(df.sparkSession, rows, VERDICT_SCHEMA)
     return verdicts, violations

@@ -15,7 +15,8 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 # Spark's byteStringAs suffixes, in MiB; a bare number is MiB
@@ -179,6 +180,47 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Rows already on the driver -> a DataFrame the JVM holds itself.
+
+    ``spark.createDataFrame(<python list>, schema)`` plans as a scan of
+    a Python RDD (``applySchemaToPythonRDD``): every collect or write
+    of such a frame, however small, starts Python worker tasks. Built
+    from an Arrow table instead, the frame plans as a JVM
+    ``LocalTableScan`` (up to
+    ``spark.sql.execution.arrow.localRelationThreshold``, 48 MB) or as
+    a JVM RDD of Arrow batches above it; neither needs a Python worker.
+
+    rows: tuples (or Rows) in schema order. schema: a StructType or a
+    DDL string. None in a non-nullable field raises ValueError, as
+    createDataFrame's verifier does.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, T.StructType):
+        schema = T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = [tuple(r) for r in rows]
+    width = len(schema.fields)
+    for r in rows:
+        if len(r) != width:
+            raise ValueError(
+                f"row {r!r} has {len(r)} fields, schema has {width}"
+            )
+    columns = list(zip(*rows)) if rows else [()] * width
+    arrays = []
+    for field, arrow_field, values in zip(schema.fields, arrow_schema, columns):
+        arr = pa.array(values, type=arrow_field.type)
+        if arr.null_count and not field.nullable:
+            raise ValueError(
+                f"field {field.name}: not nullable, but got None"
+            )
+        arrays.append(arr)
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def stop_spark() -> None:

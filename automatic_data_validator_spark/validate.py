@@ -20,6 +20,7 @@ passes replaced by four lazy plans.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +33,7 @@ from .profile import (
     profile as _profile,
     profile_quantiles,
 )
+from .session import local_frame
 from .state import Checkpointer, lineage_from_verdicts
 
 DEFAULT_RULES: list[R.Rule] = [
@@ -132,21 +134,24 @@ def run_validation(
             n_input_units = n_files
     spill = n_input_units > verdict_spill_threshold
 
-    verdict_dfs: list[DataFrame] = []
+    verdict_rows: list[tuple] = []  # default mode
+    verdict_dfs: list[DataFrame] = []  # spill mode
     violation_parts: list[DataFrame] = []
     lineage_parts: list[DataFrame] = []
     _acc_lock = threading.Lock()
 
-    def run_phase(name: str, fn) -> DataFrame:
-        """Run or resume one phase; returns the phase's verdicts.
+    def run_phase(name: str, fn) -> tuple[DataFrame, list[tuple] | None]:
+        """Run or resume one phase; returns its verdicts as
+        (frame, collected rows).
 
-        Default mode: verdicts are tiny (one row per partition x rule),
-        collected ONCE and re-materialized as a local DataFrame so
-        later consumers never re-trigger the full input scan. Spill
-        mode: verdicts stay distributed (persisted or checkpointed),
-        and lineage gets per-rule aggregate rows (partition_id null).
-        Violation rows stay lazy unless checkpointing is on (then they
-        are written+read-back, i.e. materialized exactly once).
+        Default mode: verdicts are tiny (one row per partition x rule)
+        and are collected ONCE; res.verdicts is one local frame of all
+        phases' rows, so later consumers never re-trigger an input scan
+        or start a Python worker. Spill mode: verdicts stay distributed
+        (persisted or checkpointed), rows are None, and lineage gets
+        per-rule aggregate rows (partition_id null). Violation rows
+        stay lazy unless checkpointing is on (then they are
+        written+read-back, i.e. materialized exactly once).
         """
         v_rows: list[tuple] | None = None
         if ckpt and ckpt.is_done(name):
@@ -156,7 +161,6 @@ def run_validation(
             violations = ckpt.read(spark, name, "violations")
             if not spill:
                 v_rows = [tuple(r) for r in vdf.collect()]
-                vdf = spark.createDataFrame(v_rows, R.VERDICT_SCHEMA)
         else:
             import time as _time
 
@@ -164,7 +168,7 @@ def run_validation(
             vdf, violations = fn()
             if not spill:
                 v_rows = [tuple(r) for r in vdf.collect()]
-                vdf = spark.createDataFrame(v_rows, R.VERDICT_SCHEMA)
+                vdf = local_frame(spark, v_rows, R.VERDICT_SCHEMA)
             else:
                 vdf = vdf.persist()
             duration_s = round(_time.perf_counter() - t0, 3)
@@ -189,12 +193,28 @@ def run_validation(
             l_rows = v_rows
         with _acc_lock:
             violation_parts.append(violations)
-            verdict_dfs.append(vdf)
+            if spill:
+                verdict_dfs.append(vdf)
+            else:
+                verdict_rows.extend(v_rows)
             lineage_parts.append(
                 lineage_from_verdicts(spark, l_rows, name, snapshot_id,
                                       rule_version, duration_s=duration_s)
             )
-        return vdf
+        return vdf, v_rows
+
+    def pinned(violations: DataFrame, cache: DataFrame) -> DataFrame:
+        """Default mode without checkpointing: swap a phase's violation
+        frame, read from its persisted ``cache``, for an eager local
+        checkpoint and release the cache. Checkpoint blocks are freed
+        when the frame is garbage-collected; a cache entry would stay
+        for the session. Spill mode keeps the cache (the lazy verdicts
+        read it); checkpointing writes and reads the rows back."""
+        if spill or ckpt is not None:
+            return violations
+        ck = violations.localCheckpoint(eager=True)
+        cache.unpersist()
+        return ck
 
     row_rules = R.row_level(rule_set)
     partition_totals: dict[int, int] | DataFrame | None = None
@@ -267,14 +287,18 @@ def run_validation(
     def row_rules_task():
         """Pool task: run the row-rules phase and publish its totals."""
         try:
-            vdf = run_phase("row_rules", _rr_fn)
-            totals = vdf.filter(F.col("rule_id") == row_rules[0].rule_id)
+            vdf, v_rows = run_phase("row_rules", _rr_fn)
+            first = row_rules[0].rule_id
             totals_future.set_result(
-                totals.select("partition_id", "row_count")
+                vdf.filter(F.col("rule_id") == first).select(
+                    "partition_id", "row_count"
+                )
                 if spill
+                # the rows are on the driver already: no Spark job
                 else {
-                    int(r["partition_id"]): int(r["row_count"])
-                    for r in totals.collect()
+                    int(pid): int(n)
+                    for pid, rid, n, _viol, _ok in v_rows
+                    if rid == first
                 }
             )
         except BaseException as e:
@@ -305,15 +329,18 @@ def run_validation(
         uniq_rules = [r for r in rule_set if r.kind == "unique_key"] or [
             R.Rule("unique_doc_id", "unique_key", column=key_column)
         ]
+
+        def uniqueness_phase(ur: R.Rule):
+            vdf, viol = dedup.uniqueness_check(
+                documents, ur.column or key_column, ur.rule_id,
+                partition_totals=partition_totals,
+            )
+            # the returned violations are the check's own cache entry
+            return vdf, pinned(viol, viol)
+
         for ur in uniq_rules:
             tasks.append(
-                (
-                    f"uniqueness_{ur.rule_id}",
-                    lambda ur=ur: dedup.uniqueness_check(
-                        documents, ur.column or key_column, ur.rule_id,
-                        partition_totals=partition_totals,
-                    ),
-                )
+                (f"uniqueness_{ur.rule_id}", lambda ur=ur: uniqueness_phase(ur))
             )
 
     # explicit referential rules take precedence over the implicit
@@ -326,23 +353,28 @@ def run_validation(
             "a catalog DataFrame"
         )
     if catalog is not None:
+
+        def referential_phase(rr_rule: R.Rule):
+            # referential_check in two steps, keeping the handle on its
+            # cached dangling set so it can be released
+            dangling = refcheck._dangling_refs(
+                documents, catalog, rr_rule.column or "spans"
+            )
+            vdf, viol = refcheck._check_dangling(
+                documents, dangling, rr_rule.rule_id, partition_totals
+            )
+            return vdf, pinned(viol, dangling)
+
         for rr_rule in ref_rules or (
             [R.Rule("referential_media_ref", "referential", column="spans")]
             if "spans" in documents.columns
             else []
         ):
-            spans_col = rr_rule.column or "spans"
             tasks.append(
                 (
                     f"referential_{rr_rule.rule_id}"
                     if ref_rules else "referential",
-                    lambda rr_rule=rr_rule, spans_col=spans_col: (
-                        refcheck.referential_check(
-                            documents, catalog, spans_col=spans_col,
-                            rule_id=rr_rule.rule_id,
-                            partition_totals=partition_totals,
-                        )
-                    ),
+                    lambda rr_rule=rr_rule: referential_phase(rr_rule),
                 )
             )
 
@@ -415,8 +447,8 @@ def run_validation(
                     report, grouped=True
                 )
                 return (
-                    spark.createDataFrame(v_rows, R.VERDICT_SCHEMA),
-                    spark.createDataFrame(viol_rows, R.VIOLATION_SCHEMA),
+                    local_frame(spark, v_rows, R.VERDICT_SCHEMA),
+                    local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
                 )
             cols = drift_columns or sorted(
                 set(baseline) & set(target.columns)
@@ -445,8 +477,8 @@ def run_validation(
             )
             v_rows, viol_rows = DR.drift_report_rows(report)
             return (
-                spark.createDataFrame(v_rows, R.VERDICT_SCHEMA),
-                spark.createDataFrame(viol_rows, R.VIOLATION_SCHEMA),
+                local_frame(spark, v_rows, R.VERDICT_SCHEMA),
+                local_frame(spark, viol_rows, R.VIOLATION_SCHEMA),
             )
 
         tasks.append(("drift", drift_check))
@@ -454,6 +486,17 @@ def run_validation(
     metrics = None
     metrics_future = None
     quantile_future = None
+
+    def fused_metrics() -> DataFrame:
+        prof = finalize_partial_profile(fused_state["per_part"], fused_plan)
+        if quantile_future is not None:
+            from .profile import _suggest
+
+            for c, qs in quantile_future.result().items():
+                prof.stats.setdefault(c, {}).update(qs)
+            prof.suggestions = _suggest(prof)
+        return prof.metrics_df(spark)
+
     # try/finally: the fused per-partition frame is persisted inside a
     # pool task — a phase exception must still release it, or the cache
     # entry leaks for the session's lifetime (round-3 ADVICE)
@@ -482,28 +525,25 @@ def run_validation(
                     # columns, not ids — skip (8 try_to_timestamp
                     # exprs/string col)
                     metrics_future = pool.submit(
-                        lambda: _profile(documents, detect_formats=False)
+                        lambda: _profile(
+                            documents, detect_formats=False
+                        ).metrics_df(spark)
                     )
             phase_futures = [
-                (name, pool.submit(run_phase, name, fn)) for name, fn in tasks
+                pool.submit(run_phase, name, fn) for name, fn in tasks
             ]
+            if use_fused:
+                # the merge reads only the per-partition partials, ready
+                # once the row-rules phase publishes its totals: it runs
+                # while the other phases finish
+                totals_future.result()
+                metrics_future = pool.submit(fused_metrics)
             if rr_future is not None:
                 rr_future.result()
-            for _name, fut in phase_futures:
+            for fut in phase_futures:
                 fut.result()
-            if fused_state and with_profile and metrics is None:
-                prof = finalize_partial_profile(
-                    fused_state["per_part"], fused_plan
-                )
-                if quantile_future is not None:
-                    from .profile import _suggest
-
-                    for c, qs in quantile_future.result().items():
-                        prof.stats.setdefault(c, {}).update(qs)
-                    prof.suggestions = _suggest(prof)
-                metrics = prof.metrics_df(spark)
-            elif metrics_future is not None:
-                metrics = metrics_future.result().metrics_df(spark)
+            if metrics_future is not None:
+                metrics = metrics_future.result()
             if metrics is not None and ckpt and not ckpt.is_done("profile"):
                 ckpt.write("profile", "metrics", metrics)
                 ckpt.mark_done("profile")
@@ -511,27 +551,28 @@ def run_validation(
         if fused_state:
             fused_state["per_part"].unpersist()
 
-    if not verdict_dfs:
+    if spill and verdict_dfs:
+        verdicts = reduce(DataFrame.unionByName, verdict_dfs)
+    else:
+        # one local frame of every phase's collected rows
+        verdicts = local_frame(spark, verdict_rows, R.VERDICT_SCHEMA)
+    if not violation_parts:
         # nothing ran (empty rule set, no uniqueness, no catalog):
         # return a well-formed empty result rather than crashing
         from .state import LINEAGE_SCHEMA
 
         return ValidationResult(
-            spark.createDataFrame([], R.VERDICT_SCHEMA),
-            spark.createDataFrame([], R.VIOLATION_SCHEMA),
+            verdicts,
+            local_frame(spark, [], R.VIOLATION_SCHEMA),
             metrics,
-            spark.createDataFrame([], LINEAGE_SCHEMA),
+            local_frame(spark, [], LINEAGE_SCHEMA),
         )
-    verdicts = verdict_dfs[0]
-    for x in verdict_dfs[1:]:
-        verdicts = verdicts.unionByName(x)
-    violations = violation_parts[0]
-    for x in violation_parts[1:]:
-        violations = violations.unionByName(x)
-    lineage = lineage_parts[0]
-    for l in lineage_parts[1:]:
-        lineage = lineage.unionByName(l)
-    return ValidationResult(verdicts, violations, metrics, lineage)
+    return ValidationResult(
+        verdicts,
+        reduce(DataFrame.unionByName, violation_parts),
+        metrics,
+        reduce(DataFrame.unionByName, lineage_parts),
+    )
 
 
 def canonical_violations(violations: DataFrame) -> DataFrame:

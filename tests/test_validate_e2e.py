@@ -575,3 +575,25 @@ def test_split_valid_invalid_quarantine(spark, docs, catalog):
         res.violations.filter("partition_id >= 0").select("doc_id").distinct(),
         "doc_id",
     ).count() == 0
+
+
+def test_result_frames_need_no_python_worker(spark, docs, catalog):
+    """Every result frame of a default-mode run is JVM-held: none reads
+    a Python RDD (applySchemaToPythonRDD), so collecting or writing the
+    small verdict, metric and lineage frames starts no Python worker."""
+    from automatic_data_validator_spark.drift import (
+        document_signals,
+        sketch_columns,
+    )
+
+    baseline = sketch_columns(document_signals(docs), ["n_spans", "text_chars"])
+    res = run_validation(
+        spark, docs, catalog=catalog, with_profile=True,
+        drift_baseline=baseline, drift_signals=document_signals,
+    )
+    assert {r["rule_id"] for r in res.verdicts.collect()} >= {
+        "unique_doc_id", "referential_media_ref", "drift_n_spans",
+    }
+    for name in ("verdicts", "violations", "metrics", "lineage"):
+        lineage = getattr(res, name)._jdf.queryExecution().toRdd().toDebugString()
+        assert "applySchemaToPythonRDD" not in lineage, (name, lineage)
